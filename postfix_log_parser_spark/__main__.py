@@ -12,8 +12,12 @@ Streaming (file-drop directory):
 Instead of the reference's per-event ClickHouse HTTP insert the events land
 as date-partitioned, time-sorted parquet (``sinks.write_events``); faults
 (the ``on_fault`` side channel) and residual open-session state are written
-alongside.  With no ``--out``, events print as JSON lines on stdout (the
-library-embedding / debugging path).
+alongside.  Like the reference's single pass over stdin, a batch ``--out``
+run parses and folds the input once: ``sessionize(materialize_fold=True)``
+checkpoints the fold, and the three sinks and the closing
+``events=N faults=M`` counts are narrow reads of it.  With no ``--out``,
+events print as JSON lines on stdout (the library-embedding / debugging
+path; events only, so the plan stays lazy).
 """
 
 from __future__ import annotations
@@ -58,11 +62,22 @@ def build_arg_parser() -> argparse.ArgumentParser:
         choices=("arrow", "fused", "catalyst"),
         default="arrow",
         help="batch engine: arrow = Arrow parse + partitioned fold "
-        "(default); fused = one raw-line shuffle, parse+fold in a single "
-        "Python stage (lowest shuffle volume — prefer on real clusters); "
-        "catalyst = pure-expression parse+fold (no Python on the hot path)",
+        "(default, fastest measured locally); fused = one raw-line "
+        "shuffle, parse+fold in a single Python stage (lowest shuffle "
+        "volume); catalyst = pure-expression parse+fold (no Python on the "
+        "hot path, ~15x slower).  Warm ingest of a 20k-line log on 4 "
+        "cores: arrow 2.5 s, fused 2.8 s, catalyst 43 s",
     )
     return p
+
+
+def _unpersist_new(jsc, held: set) -> None:
+    """Drop the blocks of RDDs persisted since ``held`` was taken (the
+    materialized fold).  Left to Spark's ContextCleaner they would stay
+    until the JVM's next full GC, piling up across in-process ingests."""
+    for rdd_id, rdd in jsc.getPersistentRDDs().items():
+        if rdd_id not in held:
+            rdd.unpersist(False)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -131,19 +146,32 @@ def main(argv: list[str] | None = None) -> int:
     else:
         lines = read_text(spark, args.inputs)
 
+    # --out consumes all three outputs: materialize the fold once and
+    # write each sink as a narrow read of it.  stdout consumes events
+    # only, so that plan stays lazy and fuses with the JSON export.
+    materialize = bool(args.out)
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs().keySet())
     if args.engine == "fused":
-        events, faults, state = sessionize_raw(lines)
+        events, faults, state = sessionize_raw(lines, materialize_fold=materialize)
     elif args.engine == "catalyst":
-        events, faults, state = sessionize(parse_lines(lines), fold="catalyst")
+        events, faults, state = sessionize(
+            parse_lines(lines), fold="catalyst", materialize_fold=materialize
+        )
     else:
-        events, faults, state = sessionize(parse_lines_arrow(lines), raw_lines=lines)
+        events, faults, state = sessionize(
+            parse_lines_arrow(lines), raw_lines=lines, materialize_fold=materialize
+        )
 
     if args.out:
-        write_events(events, f"{args.out}/events", mode="overwrite")
-        faults.write.mode("overwrite").parquet(f"{args.out}/faults")
-        state.write.mode("overwrite").parquet(f"{args.out}/state")
-        n_ev = spark.read.parquet(f"{args.out}/events").count()
-        n_fa = spark.read.parquet(f"{args.out}/faults").count()
+        try:
+            write_events(events, f"{args.out}/events", mode="overwrite")
+            faults.write.mode("overwrite").parquet(f"{args.out}/faults")
+            state.write.mode("overwrite").parquet(f"{args.out}/state")
+            n_ev = events.count()
+            n_fa = faults.count()
+        finally:
+            _unpersist_new(jsc, held)
         print(f"events={n_ev} faults={n_fa} -> {args.out}", file=sys.stderr)
     else:
         out = events.withColumn(

@@ -96,6 +96,14 @@ _REQUIRED_KEYS = ("from", "to", "message-id", "status", "status_description")
 _FOLD_COLUMNS = [f.name for f in FOLD_SCHEMA.fields]
 
 
+def _fault_tuple(queue_id, start_seq, reason, line, seq) -> tuple:
+    """FOLD_SCHEMA row for one fault: a fold fault (Q4/Q12, raised inside
+    a session) or a pre-fold fault (Q8, never entered state — no
+    ``start_seq``)."""
+    return ("fault", queue_id, start_seq, None, None, None, None, None,
+            None, None, reason, line, seq, None)
+
+
 class _QueueFolder:
     """The per-queue state machine: an exact transcription of ``feed_line``
     (``parse.py:380-423``) + ``PostfixEvent.__init__`` required-key checks
@@ -185,22 +193,7 @@ class _QueueFolder:
         )
 
     def _fault_row(self, reason, line, seq):
-        return (
-            "fault",
-            self.queue_id,
-            self.start_seq,
-            None,
-            None,
-            None,
-            None,
-            None,
-            None,
-            None,
-            reason,
-            line,
-            seq,
-            None,
-        )
+        return _fault_tuple(self.queue_id, self.start_seq, reason, line, seq)
 
     def feed(self, seq, line, kind, timestamp, fields, to_list, status_description,
              subject, fault_reason):
@@ -257,10 +250,18 @@ class _QueueFolder:
             self.out.append(self._session_row("state", None))
 
 
-def _feed_frame(folder_of, pdf: pd.DataFrame) -> None:
-    """Push one (queue-sorted) pandas frame through per-queue folders."""
+def _feed_frame(folder_of, pdf: pd.DataFrame, out: list) -> None:
+    """Push one (queue-sorted) pandas frame through per-queue folders.
+    Non-admitted rows are pre-fold faults (Q8): they go straight to
+    ``out`` without touching any session."""
     ts_col = pdf["timestamp"]
     for i, row in enumerate(pdf.itertuples(index=False)):
+        if not row.admitted:
+            out.append(
+                _fault_tuple(row.queue_id, None, row.fault_reason, row.line,
+                             int(row.seq))
+            )
+            continue
         ts = ts_col.iloc[i]
         folder_of(row.queue_id).feed(
             int(row.seq),
@@ -280,7 +281,7 @@ def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.sort_values("seq")
     out: list = []
     folder = _QueueFolder(pdf["queue_id"].iloc[0], out)
-    _feed_frame(lambda q: folder, pdf)
+    _feed_frame(lambda q: folder, pdf, out)
     folder.close()
     return pd.DataFrame(out, columns=_FOLD_COLUMNS)
 
@@ -290,7 +291,10 @@ def _prefold_partitions(batches, dov: dict | None = None) -> "Any":
     stream: rows for one queue are contiguous and ordered, so a linear
     scan with one live folder per queue-run replays every session at
     Python-dict speed (the reference's own per-line cost), with none of
-    the per-tiny-group scheduling overhead of applyInPandas."""
+    the per-tiny-group scheduling overhead of applyInPandas.  Pre-fold
+    fault rows (Q8, not admitted) ride the same stream and come out as
+    fault rows, so every output of ``sessionize`` derives from this one
+    fold."""
     out: list = []
     live: dict[str, _QueueFolder] = {}
     current: list = [None]  # [folder] — queue runs are contiguous
@@ -307,7 +311,7 @@ def _prefold_partitions(batches, dov: dict | None = None) -> "Any":
         return f
 
     for pdf in batches:
-        _feed_frame(folder_of, pdf)
+        _feed_frame(folder_of, pdf, out)
         if len(out) >= 10_000:
             yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
             out.clear()
@@ -385,10 +389,7 @@ def _fused_batches(batches, dov: dict) -> "Any":
             elif r[2] == "fault":
                 # pre-fold fault (never entered state): same row shape the
                 # folders emit, so one union-free output stream
-                out.append(
-                    ("fault", r[4], None, None, None, None, None, None,
-                     None, None, r[11], r[1], r[0], None)
-                )
+                out.append(_fault_tuple(r[4], None, r[11], r[1], r[0]))
         if len(out) >= 10_000:
             yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
             out.clear()
@@ -762,17 +763,35 @@ def sessionize(
     sieve lines are a small fraction of real logs); above it, sessionize
     switches to the interval equi-join fallback, which shuffles instead
     of broadcasting and never materializes the dim in one task.
-    """
-    # faults raised before any state effect (dovecot-shape IndexError):
-    pre_faults = parsed.filter(
-        (F.col("kind") == "fault") & ~F.col("admitted")
-    ).select(
-        F.col("line"),
-        F.col("fault_reason"),
-        F.col("queue_id"),
-    )
 
-    feed = parsed.filter(F.col("admitted")).select(
+    ``materialize_fold=True`` runs the fold eagerly inside this call and
+    keeps its rows as a local checkpoint; events, faults and state are
+    then narrow reads of that checkpoint, so a caller that consumes all
+    three (the batch CLI, staged fixtures) pays for one parse and one
+    fold instead of one per output.  Leave it off when only one output
+    is consumed: the lazy plan then fuses with its sink.
+
+    Pre-fold faults (Q8: short dovecot-shaped lines, never admitted to
+    state) ride the default ``partitioned`` fold's feed and come out of
+    it as fault rows, so ``faults`` reads the fold like the other two
+    outputs.  The ``catalyst`` and ``pandas`` oracle folds take admitted
+    lines only and union the pre-faults from a second pass over
+    ``parsed``.
+    """
+    if use_native is not None:  # back-compat switch used by the test oracle
+        fold = "catalyst" if use_native else "pandas"
+
+    # faults raised before any state effect (dovecot-shape IndexError)
+    is_pre_fault = (F.col("kind") == "fault") & ~F.col("admitted")
+    if fold == "partitioned":
+        feed = parsed.filter(F.col("admitted") | is_pre_fault)
+        pre_faults = None
+    else:
+        feed = parsed.filter(F.col("admitted"))
+        pre_faults = parsed.filter(is_pre_fault).select(
+            "line", "fault_reason", "queue_id"
+        )
+    feed = feed.select(
         "seq",
         "line",
         "kind",
@@ -783,9 +802,8 @@ def sessionize(
         "status_description",
         "subject",
         "fault_reason",
+        "admitted",
     )
-    if use_native is not None:  # back-compat switch used by the test oracle
-        fold = "catalyst" if use_native else "pandas"
 
     # ---- J1 dim, probed BEFORE the fold: the default fold resolves the
     # correlation in-fold from a broadcast hash map (see
@@ -938,17 +956,25 @@ def sessionize(
             "_dovecot_final", _final(F.col("_best_dseq"), F.col("_best_daction"))
         ).drop("_best_dseq", "_best_daction")
 
+    events, faults, state = _split_outputs(folded, sessions, keep_order_columns)
+    if pre_faults is not None:
+        faults = pre_faults.unionByName(faults)
+    return events, faults, state
+
+
+def _split_outputs(
+    folded: DataFrame, sessions: DataFrame, keep_order_columns: bool
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(events, faults, state) from the fold rows: ``sessions`` is the
+    fold's non-fault rows carrying the resolved ``_dovecot_final``."""
     events = _project_events(sessions.filter(F.col("record_type") == "event"))
     if not keep_order_columns:
         events = events.select(*EVENT_COLUMNS)
-
-    fold_faults = folded.filter(F.col("record_type") == "fault").select(
+    faults = folded.filter(F.col("record_type") == "fault").select(
         F.col("fault_line").alias("line"),
         F.col("fault_reason"),
         F.col("queue_id"),
     )
-    faults = pre_faults.unionByName(fold_faults)
-
     state = sessions.filter(F.col("record_type") == "state").select(
         "queue_id",
         "timestamp",
@@ -965,6 +991,7 @@ def sessionize_raw(
     line_col: str = "value",
     keep_order_columns: bool = False,
     max_broadcast_dovecot: int = 500_000,
+    materialize_fold: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fused parse+sessionize engine — the throughput path.
 
@@ -989,7 +1016,8 @@ def sessionize_raw(
 
     Falls back to the unfused path when the sieve dim exceeds the
     broadcast bound.  Differentially tested against the unfused engine on
-    every golden fixture (``tests/test_fused.py``).
+    every golden fixture (``tests/test_fused.py``).  ``materialize_fold``
+    is ``sessionize``'s: one eager fold, three narrow reads of it.
     """
     from postfix_log_parser_spark.operators.parse import (
         _QUEUE_ID_RE,
@@ -1015,6 +1043,7 @@ def sessionize_raw(
             keep_order_columns=keep_order_columns,
             raw_lines=raw_lines,
             max_broadcast_dovecot=max_broadcast_dovecot,
+            materialize_fold=materialize_fold,
         )
 
     dov_map: dict[str, tuple[list, list]] = {}
@@ -1048,24 +1077,10 @@ def sessionize_raw(
     folded = arranged.mapInPandas(
         lambda batches: _fused_batches(batches, dov_bc.value), FOLD_SCHEMA
     )
+    if materialize_fold:
+        folded = folded.localCheckpoint(eager=True)
 
     sessions = folded.filter(F.col("record_type") != "fault").withColumn(
         "_dovecot_final", F.col("dovecot_final")
     )
-    events = _project_events(sessions.filter(F.col("record_type") == "event"))
-    if not keep_order_columns:
-        events = events.select(*EVENT_COLUMNS)
-    faults = folded.filter(F.col("record_type") == "fault").select(
-        F.col("fault_line").alias("line"),
-        F.col("fault_reason"),
-        F.col("queue_id"),
-    )
-    state = sessions.filter(F.col("record_type") == "state").select(
-        "queue_id",
-        "timestamp",
-        "fields",
-        "to_list",
-        "raw_log",
-        F.col("_dovecot_final").alias("dovecot_fileinto_action"),
-    )
-    return events, faults, state
+    return _split_outputs(folded, sessions, keep_order_columns)

@@ -2,6 +2,8 @@
 
 import os
 
+import pytest
+
 from postfix_log_parser_spark.__main__ import main
 
 LOG = """\
@@ -46,12 +48,17 @@ def test_cli_stream_once(spark, tmp_path):
     assert faults.count() == 0
 
 
+# a Q4 fold fault (removed with no fields -> KeyError) and a Q8 pre-fault
+# (short dovecot-shaped Info: line -> IndexError)
+BAD_LOG = LOG + (
+    "2024-04-09T20:22:45.000001+03:00 localhost postfix/qmgr[3]: "
+    "CCCCCCCCCCC: removed\n"
+    "2024-04-09T20:22:45.100000+03:00 lmtp(x)<1><2> host x Info:\n"
+)
+
+
 def test_cli_stream_once_writes_faults(spark, tmp_path):
-    bad = LOG + (
-        "2024-04-09T20:22:45.000001+03:00 localhost postfix/qmgr[3]: "
-        "CCCCCCCCCCC: removed\n"
-        "2024-04-09T20:22:45.100000+03:00 lmtp(x)<1><2> host x Info:\n"
-    )
+    bad = BAD_LOG
     in_dir = tmp_path / "drop"
     in_dir.mkdir()
     (in_dir / "mail.log").write_text(bad)
@@ -106,3 +113,32 @@ def test_cli_batch_out_fused_engine(spark, tmp_path):
     assert row["status_code"] == 250
     state = spark.read.parquet(str(out / "state"))
     assert [r["queue_id"] for r in state.collect()] == ["BBBBBBBBBBB"]
+
+
+@pytest.mark.parametrize("engine", ["arrow", "fused", "catalyst"])
+def test_cli_batch_out_writes_faults(spark, tmp_path, capsys, engine):
+    """Batch twin of ``test_cli_stream_once_writes_faults``: both fault
+    kinds reach ``out/faults`` whichever engine folds, and the summary
+    line counts what was written."""
+    log = tmp_path / "mail.log"
+    log.write_text(BAD_LOG)
+    out = tmp_path / "out"
+    assert main([str(log), "--out", str(out), "--engine", engine]) == 0
+    faults = spark.read.parquet(str(out / "faults")).collect()
+    by_reason = {r["fault_reason"]: r for r in faults}
+    assert sorted(by_reason) == [
+        "IndexError: dovecot-shaped line too short",
+        "KeyError: 'from'",
+    ]
+    assert by_reason["KeyError: 'from'"]["queue_id"] == "CCCCCCCCCCC"
+    assert by_reason["IndexError: dovecot-shaped line too short"]["line"].endswith(
+        "host x Info:"
+    )
+    events = spark.read.parquet(str(out / "events"))
+    assert [r["queue_id"] for r in events.collect()] == ["85C6C10208A"]
+    state = spark.read.parquet(str(out / "state"))
+    assert sorted(r["queue_id"] for r in state.collect()) == [
+        "BBBBBBBBBBB",
+        "CCCCCCCCCCC",
+    ]
+    assert f"events=1 faults=2 -> {out}" in capsys.readouterr().err.splitlines()

@@ -1195,3 +1195,61 @@ def test_q163_codec_runs_on_identity_table_not_corpus(spark):
     codec_side = plan.split("MapInPandas")[1]
     assert "HashAggregate" in codec_side
     assert "CartesianProduct" not in plan
+
+
+# a completed session with a sieve line, a Q4 fold fault, a Q8 pre-fault
+# and an open session: events, faults and state are all non-empty
+_FOLD_ONCE_LINES = [
+    "2024-04-09T20:22:42.000000+03:00 h p AAAAAAAAAAA: from=<a@b.c>",
+    "2024-04-09T20:22:42.100000+03:00 h p AAAAAAAAAAA: message-id=<m@1>",
+    "2024-04-09T20:22:42.200000+03:00 h p AAAAAAAAAAA: to=<d@e.f>, "
+    "status=sent (250 2.0.0 ok)",
+    "2024-04-09T20:22:42.300000+03:00 h dovecot: lmtp(d)<1><2>: Info: "
+    "sieve: msgid=<m@1>: fileinto action: stored mail into mailbox 'X'",
+    "2024-04-09T20:22:43.000000+03:00 h p AAAAAAAAAAA: removed",
+    "2024-04-09T20:22:44.000000+03:00 h p CCCCCCCCCCC: removed",
+    "2024-04-09T20:22:45.000000+03:00 lmtp(x)<1><2> host x Info:",
+    "2024-04-09T20:22:46.000000+03:00 h p BBBBBBBBBBB: from=<o@s.c>",
+]
+
+# physical Python nodes (parse/fold mapInPandas and kin)
+_PYTHON_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+@pytest.mark.parametrize("engine", ["arrow", "fused"])
+def test_materialized_fold_outputs_read_only_the_checkpoint(spark, engine):
+    """With ``materialize_fold=True`` the parse and fold run once, inside
+    the sessionize call: events, faults (Q8 pre-faults included) and state
+    must each plan as a narrow read of the one checkpoint — no Python
+    parse/fold node, no exchange, no other scan."""
+    from postfix_log_parser_spark.operators.parse import parse_lines_arrow
+    from postfix_log_parser_spark.operators.sessionize import (
+        sessionize,
+        sessionize_raw,
+    )
+    from postfix_log_parser_spark.sources.text import lines_df
+
+    raw = lines_df(spark, _FOLD_ONCE_LINES)
+    if engine == "arrow":
+        outs = sessionize(parse_lines_arrow(raw), raw_lines=raw, materialize_fold=True)
+    else:
+        outs = sessionize_raw(raw, materialize_fold=True)
+    for name, df in zip(("events", "faults", "state"), outs):
+        plan = _plan(df)
+        for node in _PYTHON_NODES:
+            assert node not in plan, f"{name} re-runs a Python stage:\n{plan}"
+        assert "Exchange" not in plan, f"{name} shuffles:\n{plan}"
+        scans = [ln for ln in plan.splitlines() if "Scan " in ln]
+        assert len(scans) == 1 and "ExistingRDD" in scans[0], f"{name}:\n{plan}"
+    events, faults, state = outs
+    assert events.count() == 1 and state.count() == 2  # CCCCCCCCCCC stays open (Q4)
+    assert sorted(r["fault_reason"] for r in faults.collect()) == [
+        "IndexError: dovecot-shaped line too short",
+        "KeyError: 'from'",
+    ]
